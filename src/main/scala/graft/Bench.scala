@@ -251,6 +251,11 @@ object Bench {
     }
   }
 
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `s` as a quoted, escaped JSON string. */
+  private def jsonString(s: String): String = jsonMapper.writeValueAsString(s)
+
   /** The one-line bench JSON. Failed queries appear with timing −1 AND
     * in a `"failed"` list; the total sums only successful timings, so a
     * broken query can never flatter the headline number. A non-empty
@@ -327,8 +332,11 @@ object Bench {
     // the same env var; flat low/high-core ratios at sf0.1 are fixed-
     // cost saturation, not an ignored knob — evidence/scaling_r16.json
     // shows the same binary separating 8 vs 32 cores at sf1)
+    // cpus is a number when it parses as one, otherwise an escaped
+    // string, so any env value still yields valid JSON
+    val cpusJson = cpus.toIntOption.fold(jsonString(cpus))(_.toString)
     val envJson = if (cpus.isEmpty) ""
-      else s""""cpus":$cpus,"master":"$master","sf_dir":"$sfDir","""
+      else s""""cpus":$cpusJson,"master":${jsonString(master)},"sf_dir":"$sfDir","""
     f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson"queries":$qs,"warmup_queries":$wq,"memoized":$memo,"failed":$failed,"bench_failures":$nFailed,"playback_rps":$playbackRps%.0f,"playback_rps_agg8":$playbackAgg8%.0f,"host_probe_sec":$probeJson,"host_noise_factor":$noise%.2f,"host_sentinel":$sentJson,"host_scaling_ratio":$worstScaling%.2f,"phase_contention":$phaseJson,"query_contention":$qcJson,"regressions":$regressions,"prior_bench":$priorJson,"playback_stop_interrupts":$stopInterrupts,"task_failed":$taskFailed,"task_killed":$taskKilled,"sf":"$sfDir"}"""
   }
 }

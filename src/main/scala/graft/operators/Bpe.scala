@@ -43,39 +43,30 @@ import org.apache.spark.sql.functions._
   *     — and pays the chain once per word TYPE, not per token: the
   *     chunked fold runs over the distinct-word table (vocabulary-
   *     sized, so each checkpoint materializes kilobytes–megabytes, not
-  *     the corpus), then one broadcast join maps corpus words to their
+  *     the corpus), then one equi-join maps corpus words to their
   *     segmentation. Plan depth is O(chunkEvery); values are provably
   *     unchanged (checkpoint placement never changes the arithmetic).
   *   - train barriers: greedy BPE is inherently sequential — one
-  *     argmax per merge, so [[train]] is `numMerges` Spark jobs each
-  *     ending in a 1-row collect (the model-parameter pattern). That
-  *     constant is MEASURED (evidence/bpe_scale_r14.json: wall vs
-  *     merge count at 64/128/256/512). At a production 32k–64k vocab
-  *     the scheduling alone is hours, so the production path is
-  *     [[trainCutoff]]: ONE corpus aggregate, keep the top `maxTypes`
-  *     word types under the total (freq DESC, word) order, train
-  *     locally on that bounded table ([[trainLocal]], property-pinned
-  *     equal to the distributed trainer), broadcast the model. The
-  *     cutoff changes the trained model iff a cut type would have
-  *     contributed to some round's winning pair — the standard
-  *     corpus-frequency-threshold tradeoff every production tokenizer
-  *     makes, here with a deterministic boundary.
+  *     argmax per merge over the word-type table (Sennrich et al. 2016,
+  *     arXiv:1508.07909) — so a Spark job per merge buys no parallelism,
+  *     only scheduling. [[train]] therefore runs ONE corpus aggregate,
+  *     collects the complete type table under the loud [[MaxTypes]]
+  *     bound, and trains in memory ([[trainLocal]]). Every type votes,
+  *     so the model is exactly the full-recount model the DuckDB
+  *     oracles replay round by round.
   *
-  * 100 TB shape: train = one corpus aggregate + R vocabulary-sized
-  * rounds (each one narrow groupBy on fixed-width pair keys + a 1-row
-  * driver collect); encode = chunked type-table fold + broadcast
-  * joins — corpus text never shuffles. The per-round train body is
-  * plan-audited via [[IterTrace]] ("bpe_merge"), the per-chunk encode
-  * body via "bpe_encode_chunk".
+  * 100 TB shape: train = one corpus aggregate + a driver-side type
+  * table of at most [[MaxTypes]] rows (a larger vocabulary fails
+  * loudly, never trains a silently different model); encode = chunked
+  * type-table fold + one equi-join back to corpus words + a broadcast
+  * vocab join. The per-chunk encode body is plan-audited via
+  * [[IterTrace]] ("bpe_encode_chunk").
   */
 object Bpe {
 
-  /** Merge count above which [[train]] switches from the classic
-    * full-recount round to the incremental carried-pair-count round —
-    * the measured crossover band on the widest gated fixture (see the
-    * threshold note inside [[train]]). Both sides produce the
-    * IDENTICAL model (BpeSpec pins equality straddling the bound). */
-  val IncrementalFrom: Int = 256
+  /** Largest word-type table [[train]] collects to the driver. The
+    * widest gated fixture (t39/t40) has under 19k types. */
+  val MaxTypes: Int = 1 << 16
 
   /** A trained tokenizer: ordered merges + the base alphabet. Ids:
     * alphabet symbols get 0..|A|−1 in lexicographic order, merge of
@@ -117,157 +108,26 @@ object Bpe {
   def applyMerge(state: Column, l: String, r: String): Column =
     replace(state, lit(s" $l  $r "), lit(s" $l$r "))
 
-  /** Adjacent symbol pairs of each state, freq-weighted — the round's
-    * counting frame. All native: split + posexplode + element_at. */
-  private def pairFrame(states: DataFrame): DataFrame =
-    weightedPairs(states.select(col("freq").as("w"), col("state").as("st")))
-      .groupBy(col("lhs"), col("rhs")).agg(sum(col("w")).as("cnt"))
-
-  /** (w, st) rows → one (w, lhs, rhs) row per adjacent symbol pair of
-    * `st` — the shared explode of [[pairFrame]] and the incremental
-    * delta in [[train]], so both paths count with byte-identical
-    * logic. All native: split + posexplode + element_at. */
-  private def weightedPairs(rows: DataFrame): DataFrame =
-    rows
-      .select(col("w"),
-        split(expr("substring(st, 2, length(st) - 2)"), "  ").as("syms"))
-      .select(col("w"), col("syms"),
-        posexplode(col("syms")).as(Seq("i", "lhs")))
-      .filter(col("i") < size(col("syms")) - 1)
-      .select(col("w"), col("lhs"),
-        element_at(col("syms"), col("i") + 2).as("rhs"))
-
-  /** Train `numMerges` merges over `docs(textCol)`. Returns the model;
-    * the loop checkpoints the type-table state per round and routes
-    * the round body through [[IterTrace]] like every other iterative
-    * operator. Requires the corpus to still have at least one adjacent
-    * pair at every round (i.e. `numMerges` below the corpus's merge
-    * capacity Σ(|word|−1) over types) — a silent early stop would
-    * diverge from the oracle's fixed unroll, so running dry throws.
-    * Sequential by nature (see the object doc's train-barriers note);
-    * [[trainCutoff]] is the bounded-driver-table production variant. */
+  /** Train `numMerges` merges over `docs(textCol)`: one [[wordFreqs]]
+    * aggregate, then [[trainLocal]] over the complete type table. More
+    * than [[MaxTypes]] word types fails loudly. Requires the corpus to
+    * still have at least one adjacent pair at every round (i.e.
+    * `numMerges` below the corpus's merge capacity Σ(|word|−1) over
+    * types) — a silent early stop would diverge from the oracle's
+    * fixed unroll, so running dry throws. */
   def train(spark: SparkSession, docs: DataFrame, textCol: String,
-      numMerges: Int, checkpointEvery: Int = 8,
-      incrementalFrom: Int = IncrementalFrom): Model = {
-    require(checkpointEvery >= 1, "checkpointEvery >= 1")
-    val words = wordFreqs(docs, textCol).localCheckpoint(false) // lazy:
-    // the alphabet collect below materializes it
-    val alphabet = words
-      .select(explode(split(col("word"), "")).as("sym"))
-      .filter(col("sym") =!= "").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted // ≤36 by the pre-token contract
-    // The merge loop plans in an ISOLATED cloned session ([[LoopSession]],
-    // r16 — r15 set/restored the caller's conf, a foot-gun for any
-    // concurrent caller) with AQE OFF and ONE shuffle partition: every
-    // frame the loop plans is vocab-bounded BY CONSTRUCTION (the whole
-    // point of training on the type table), so AQE's runtime
-    // re-optimization — partition coalescing, skew splits — has
-    // nothing to improve, while its stage-materialization scheduling
-    // DOUBLES the per-merge barrier count (one submitMapStage job per
-    // pair-count exchange + the collect job). The sequential barrier
-    // constant is distributed BPE's bottleneck at ANY scale (measured:
-    // evidence/bpe_scale_r*.json), so halving jobs-per-merge is a
-    // scale win, not a local-mode tweak. Results are unaffected — AQE
-    // never changes values. The pair aggregate's reduce side holds
-    // DISTINCT adjacent pairs — O(vocab · avg word length) rows at ANY
-    // corpus scale (the map side already partially aggregated per
-    // partition), so one reduce task is the operator's correct
-    // parallelism for its bounded cardinality, not a local-mode tune.
-    // The corpus-sized wordFreqs aggregate above stays under the
-    // caller's session and conf — only the loop's tiny plans opt out.
-    val loop = LoopSession.cloned(spark,
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "1")
-    var states = LoopSession.rebind(
-        words.withColumn("state", initialState(col("word"))), loop)
-      .localCheckpoint(false) // lazy: round 1's best-pair collect materializes it
-    // INCREMENTAL pair counts above IncrementalFrom merges (r16):
-    // merging (l, r) only changes the adjacent-pair counts of word
-    // types whose state CONTAINS the pattern " l  r " — every other
-    // state is untouched by the replace — so instead of re-exploding
-    // and re-aggregating the FULL type table every round (the classic
-    // formulation, O(total symbols) per merge), the loop carries the
-    // (lhs, rhs, cnt) table forward and applies a signed delta over
-    // the affected types only: each affected state contributes its
-    // pre-merge pairs at −freq and its post-merge pairs at +freq, in
-    // ONE scan (the two states ride an exploded 2-array so the
-    // affected set is read once). The carried table equals
-    // pairFrame(states) EXACTLY at every round by induction — integer
-    // sums, same explode logic (weightedPairs), unaffected rows
-    // contribute zero — so the argmax under (cnt DESC, lhs, rhs)
-    // picks the identical merge; BpeSpec pins train == trainLocal at
-    // counts on BOTH sides of the threshold and the t34/t35/t39
-    // oracles replay the full-recount formulation against it.
-    //
-    // Why a threshold and not incremental-always (measured r16, same-
-    // window pairs on the 18.9k-type wide fixture): the carried table
-    // adds one union-aggregate + one checkpoint per merge, and below a
-    // few hundred merges that constant outweighs the explode it saves
-    // — 24 merges read 1.4× slower, 128/256 read 1.1–1.2× slower,
-    // while 512 reads 0.90× and the gap widens with vocabulary (the
-    // affected fraction per merge shrinks as Heaps-law type tables
-    // grow, while the full explode stays O(all types · avg length)).
-    // Small gated trains keep the classic recount; big production
-    // vocabularies get the incremental table.
-    val incremental = numMerges > incrementalFrom
-    var counts =
-      if (incremental) pairFrame(states).localCheckpoint(false) else null
-    val merges = Seq.newBuilder[(String, String, Long)]
-    var rank = 1
-    while (rank <= numMerges) {
-      val best = (if (incremental) counts else pairFrame(states))
-        .orderBy(desc("cnt"), col("lhs"), col("rhs"))
-        .limit(1).collect() // 1 row: the model parameter, not data
-      require(best.nonEmpty,
-        s"BPE ran out of pairs at merge $rank/$numMerges — corpus too " +
-          "small for the requested vocabulary")
-      val (l, r, c) =
-        (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-      merges += ((l, r, c))
-      if (incremental) {
-        // signed one-scan delta over the affected types (see note
-        // above); the raw signed pair rows union straight into the
-        // carried table ahead of ONE groupBy — a delta-side
-        // pre-aggregate would add an exchange per merge for rows the
-        // union agg absorbs anyway
-        val aff = states.filter(col("state").contains(s" $l  $r "))
-        val delta = weightedPairs(aff
-            .select(col("freq"), explode(array(
-              struct(col("state").as("st"), lit(-1L).as("sg")),
-              struct(applyMerge(col("state"), l, r).as("st"),
-                lit(1L).as("sg")))).as("x"))
-            .select((col("freq") * col("x.sg")).as("w"), col("x.st").as("st")))
-          .select(col("lhs"), col("rhs"), col("w").as("cnt"))
-        counts = IterTrace.record("bpe_pair_delta",
-          counts.unionByName(delta)
-            .groupBy(col("lhs"), col("rhs")).agg(sum(col("cnt")).as("cnt"))
-            .filter(col("cnt") > 0)) // a zeroed pair has no occurrences —
-          // exactly pairFrame's "no row", keeping the induction invariant
-          .localCheckpoint(false) // lazy: the NEXT round's argmax collect
-          // materializes it (one job per merge, the sequential floor)
-      }
-      // Unlike the graph loops, the loop-carried state here is a PURE
-      // PROJECTION (a chain of literal replaces over the checkpointed
-      // type table) — no joins, no shuffles — so re-computing a few
-      // chained replaces per round is cheaper than a materialization
-      // round-trip per merge. Checkpoint every `checkpointEvery`
-      // merges instead: plan depth stays bounded, per-round map work
-      // stays O(checkpointEvery), and the per-merge barrier is the
-      // (unavoidable) argmax collect alone. Values are unaffected —
-      // checkpoint placement never changes the arithmetic.
-      states = IterTrace.record("bpe_merge",
-        states.withColumn("state", applyMerge(col("state"), l, r)))
-      if (rank % checkpointEvery == 0) states = states.localCheckpoint(false)
-      rank += 1
-    }
-    Model(alphabet, merges.result())
+      numMerges: Int): Model = {
+    val rows = wordFreqs(docs, textCol).limit(MaxTypes + 1).collect()
+    require(rows.length <= MaxTypes,
+      s"Bpe.train: more than MaxTypes=$MaxTypes word types")
+    trainLocal(rows.map(r => (r.getString(0), r.getLong(1))).toSeq, numMerges)
   }
 
-  /** Greedy BPE over an in-memory type table — the exact same total
-    * order and leftmost-first application as [[train]] (BpeSpec pins
-    * the two equal on the gated fixtures). Pure Scala: `numMerges`
-    * rounds over `types.size` symbol vectors, no Spark jobs. */
-  def trainLocal(types: Seq[(String, Long)], numMerges: Int): Model = {
+  /** Greedy BPE over an in-memory type table: argmax under the total
+    * (count DESC, left ASC, right ASC) order, leftmost-first
+    * application. Pure Scala: `numMerges` rounds over `types.size`
+    * symbol vectors, no Spark jobs. */
+  private def trainLocal(types: Seq[(String, Long)], numMerges: Int): Model = {
     require(types.nonEmpty, "empty type table")
     val alphabet =
       types.flatMap(_._1.split("")).filter(_.nonEmpty).distinct.sorted
@@ -307,51 +167,6 @@ object Bpe {
       rank += 1
     }
     Model(alphabet, merges.result())
-  }
-
-  /** Production-scale training: ONE corpus aggregate, keep the top
-    * `maxTypes` word types under the total (freq DESC, word ASC)
-    * order, train locally on the bounded survivor table. At 32k–64k
-    * merges the distributed trainer's one-job-per-merge scheduling is
-    * hours of pure barriers; this path makes training driver-local
-    * over a few-MB table while the corpus-sized work stays exactly one
-    * Spark aggregate. The cutoff is part of the model's definition: a
-    * cut type's pair counts no longer vote, so models coincide with
-    * [[train]] exactly when `maxTypes` covers every type (pinned in
-    * BpeSpec) and diverge only the standard frequency-threshold way
-    * otherwise. */
-  def trainCutoff(spark: SparkSession, docs: DataFrame, textCol: String,
-      numMerges: Int, maxTypes: Int): Model = {
-    require(maxTypes >= 1, "maxTypes >= 1")
-    val types = wordFreqs(docs, textCol)
-      .orderBy(desc("freq"), col("word")).limit(maxTypes)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    trainLocal(types, numMerges)
-  }
-
-  /** [[trainLocal]] over the COMPLETE type table, with a loud bound:
-    * collects every word type (requiring there are at most `maxTypes`
-    * of them — more fails with an error, never a silently different
-    * model) and trains locally. Because every type votes, the result
-    * is EXACTLY the distributed [[train]]'s model (the BpeSpec
-    * property), at one Spark aggregate instead of one job barrier per
-    * merge — the right trainer whenever the caller can assert a
-    * driver-side bound on vocabulary size (closed fixture
-    * vocabularies; any corpus whose type table is known-small).
-    * Unbounded raw-crawl vocabularies use [[trainCutoff]] and accept
-    * the standard frequency-threshold tradeoff instead. */
-  def trainFullLocal(spark: SparkSession, docs: DataFrame, textCol: String,
-      numMerges: Int, maxTypes: Int): Model = {
-    require(maxTypes >= 1, "maxTypes >= 1")
-    val rows = wordFreqs(docs, textCol)
-      .orderBy(desc("freq"), col("word")).limit(maxTypes + 1)
-      .collect()
-    require(rows.length <= maxTypes,
-      s"trainFullLocal: more than maxTypes=$maxTypes word types — the " +
-        "full-equality bound does not hold; raise the bound or use " +
-        "train/trainCutoff")
-    trainLocal(rows.map(r => (r.getString(0), r.getLong(1))).toSeq,
-      numMerges)
   }
 
   /** Segmentation state of ANY word under the trained merges — a

@@ -58,8 +58,6 @@ object IterTrace {
     "cc_star_small" -> "d07_dup_components",
     "cc_minlabel" -> "",
     "mmr_round" -> "v35_mmr_diversified_topk",
-    "bpe_merge" -> "t34_bpe_train",
-    "bpe_pair_delta" -> "t34_bpe_train",
     "bpe_encode_chunk" -> "t40_bpe_wide_encode",
     "logit_gd" -> "t38_quality_classifier_train")
 }

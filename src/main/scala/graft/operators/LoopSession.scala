@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scoped-conf planning for bounded iterative loops.
   *
-  * Some loop bodies are provably bounded (BPE's pair aggregate is
-  * vocab-sized, a graph loop's rank frame is node-sized) and want loop
-  * -specific SQL confs — non-adaptive execution, a derived shuffle
-  * -partition count — WITHOUT mutating the caller's session: r15 set
-  * and restored `spark.conf` around the loop, which is correct for the
-  * engine's sequential mains but a foot-gun for any concurrent caller
+  * Some loop bodies are provably bounded (a graph loop's rank frame is
+  * node-sized) and want loop-specific SQL confs — non-adaptive
+  * execution, a derived shuffle-partition count — WITHOUT mutating
+  * the caller's session: r15 set and restored `spark.conf` around the
+  * loop, which is correct for the engine's sequential mains but a
+  * foot-gun for any concurrent caller
   * (a query planned in the same session mid-loop would silently plan
   * under the loop's confs). The fix is structural: plan the loop in a
   * CLONED session (`SparkSession.newSession` — same SparkContext,
@@ -26,14 +26,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object LoopSession {
 
-  /** A cloned session carrying loop-scoped SQL confs. The caller's
-    * session is never mutated. */
-  def cloned(spark: SparkSession, confs: (String, String)*): SparkSession = {
-    val s = spark.newSession()
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    s
-  }
-
   /** A cloned session for a NON-ADAPTIVE bounded loop over ~`n` keyed
     * rows: AQE off (nothing to re-optimize in a bounded round, and its
     * stage materialization schedules one job per exchange per round)
@@ -44,10 +36,12 @@ private[graft] object LoopSession {
     * caller's session value. Scale-adaptive by construction: the same
     * code picks 1 partition on a 300-node fixture and the cluster's
     * own parallelism on a 10⁹-row input. */
-  def nonAdaptive(spark: SparkSession, n: Long): SparkSession =
-    cloned(spark,
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> derivedPartitions(spark, n).toString)
+  def nonAdaptive(spark: SparkSession, n: Long): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", derivedPartitions(spark, n).toString)
+    s
+  }
 
   /** See [[nonAdaptive]]. */
   def derivedPartitions(spark: SparkSession, n: Long): Int = {

@@ -199,7 +199,7 @@ object PipelineQueries {
   // (Bpe.encode fails loudly on unseen symbols by design).
   //
   // Scale shape on top of c01's: + one (word)-keyed aggregate over the
-  // ingest for training, 24 vocabulary-sized merge rounds, and the
+  // ingest for training, 24 in-memory merge rounds, and the
   // per-survivor encode (map-side chain + broadcast vocab join + one
   // (doc_id)-keyed count). Text still shuffles exactly twice.
   private val c02 = GraftQuery(
@@ -214,17 +214,11 @@ object PipelineQueries {
           col("source"))
       val p0 = docs.unionByName(near).unionByName(exact)
       val p4 = survivorDocs(s, d)
-      // trainFullLocal, not the distributed trainer: this gate is
-      // about stage COMPOSITION (t34/t35/t39 gate the distributed
-      // trainer itself), and the per-merge job barrier is pure cost
-      // here — the complete type table is collected under a LOUD
-      // 2^16 bound (31 types on this fixture at every sf; exceeding
-      // the bound errors, never silently diverges) and trained
-      // locally, which is property-pinned EQUAL to Bpe.train when
-      // every type votes. One corpus aggregate instead of one Spark
-      // job per merge round. Measured r15: c02 6.1 -> ~4 s at sf0.1.
-      val model = graft.operators.Bpe.trainFullLocal(s, p0, "text",
-        TextQueries.bpeMergeRounds, maxTypes = 1 << 16)
+      // the same one-aggregate trainer as t34: the complete type table
+      // (31 types on this fixture at every sf) is collected under
+      // Bpe.MaxTypes and trained in memory
+      val model = graft.operators.Bpe.train(s, p0, "text",
+        TextQueries.bpeMergeRounds)
       val counts = graft.operators.Bpe
         .encode(s, p4, "doc_id", "text", model)
         .groupBy("doc_id").agg(count(lit(1)).as("_btok"))

@@ -1415,7 +1415,8 @@ object TextQueries {
   // hash-gates the TRAINED MODEL (every merge's rank, pair, and
   // frequency — a wrong count, tie order, or application rule at any
   // round diverges), t35 hash-gates FULL TOKEN-ID SEQUENCES of the
-  // encoded documents. The oracle replays training from first
+  // encoded documents. The engine trains in memory on the collected
+  // word-type table (Bpe.train); the oracle replays training from first
   // principles as 24 unrolled per-merge CTE blocks (the q68/q76
   // iterative-oracle pattern; AS MATERIALIZED per the CTE-inlining
   // rule): count adjacent symbol pairs freq-weighted over the

@@ -5,10 +5,9 @@ import graft.operators.Bpe
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev harness: BPE train wall-time vs merge count on the wide-vocab
-  * fixture (t39/t40's corpus — ≥5k word types derived from orders via
-  * md5), plus trainLocal/trainCutoff equality and chunked-encode
-  * parity. Produces the numbers for evidence/bpe_scale_r14.json.
+/** Dev harness: BPE train and encode wall-time vs merge count on the
+  * wide-vocab fixture (t39/t40's corpus — ≥5k word types derived from
+  * orders via md5). Prints one JSON line with a row per merge count.
   *
   * Usage: BpeScaleBench <sfDir> [mergeCounts...]
   */
@@ -39,20 +38,14 @@ object BpeScaleBench {
       val model = Bpe.train(spark, wide, "text", m)
       val tTrain = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val local = Bpe.trainCutoff(spark, wide, "text", m,
-        maxTypes = Int.MaxValue)
-      val tLocal = (System.nanoTime() - t1) / 1e9
-      val eq = model == local
-      val t2 = System.nanoTime()
       val enc = Bpe.encode(spark,
         wide.select(col("b").as("doc_id"), col("text")),
         "doc_id", "text", model)
       val nTok = enc.count()
-      val tEnc = (System.nanoTime() - t2) / 1e9
+      val tEnc = (System.nanoTime() - t1) / 1e9
       System.err.println(
-        f"merges=$m%4d train=$tTrain%7.1fs local=$tLocal%5.1fs " +
-          f"local_eq=$eq enc=$tEnc%5.1fs tokens=$nTok")
-      f"""{"merges":$m,"train_sec":$tTrain%.2f,"train_local_sec":$tLocal%.2f,"local_equals_distributed":$eq,"encode_sec":$tEnc%.2f,"encoded_tokens":$nTok}"""
+        f"merges=$m%4d train=$tTrain%7.1fs enc=$tEnc%5.1fs tokens=$nTok")
+      f"""{"merges":$m,"train_sec":$tTrain%.2f,"encode_sec":$tEnc%.2f,"encoded_tokens":$nTok}"""
     }
     println(
       s"""{"fixture":"$sfDir","word_types":$nTypes,"rows":[${rows.mkString(",")}]}""")

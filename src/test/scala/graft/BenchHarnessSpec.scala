@@ -65,6 +65,15 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(legacy.contains(""""unit":"sec","queries""""), legacy)
   }
 
+  test("renderJson stays valid JSON when cpus is not a number") {
+    val json = Bench.renderJson(
+      Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf",
+      cpus = "*", master = "local[*]")
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.get("cpus").asText == "*", json)
+    assert(tree.get("master").asText == "local[*]", json)
+  }
+
   test("renderJson carries the parallelism sentinel and task accounting verbatim") {
     // the fields the r12 sentinel redesign added are the driver's only
     // window into a degraded measurement — pin their presence and that

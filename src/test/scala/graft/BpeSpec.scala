@@ -37,20 +37,6 @@ class BpeSpec extends SparkSpec {
     assert(toks == Seq("aa", "a"))
   }
 
-  test("incremental pair-count path == classic recount path (threshold straddle)") {
-    val docs = TestSpark.spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    // force the incremental carried-counts loop at a merge count the
-    // default threshold would run classic, and pin model equality —
-    // the induction invariant (carried table == pairFrame(states)
-    // every round) made observable
-    val classic = Bpe.train(spark, docs, "text", 24)
-    val incremental = Bpe.train(spark, docs, "text", 24,
-      incrementalFrom = 0)
-    assert(incremental == classic,
-      "carried-pair-count loop must pick the identical merge sequence")
-  }
-
   test("encode chain equals the trained segmentation for every training word") {
     import spark.implicits._
     // the single-application fixpoint argument, checked empirically:
@@ -172,41 +158,15 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("trainLocal == distributed train (the production cutoff path's core)") {
-    val docs = TestSpark.spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-    val dist = Bpe.train(spark, docs, "text", 24)
-    val types = Bpe.wordFreqs(docs, "text").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(Bpe.trainLocal(types, 24) == dist)
-  }
-
-  test("trainCutoff covering every type == train; a real cutoff re-votes") {
-    import spark.implicits._
-    val docs = Seq("aa aa aa ab ab zz zz zz zz").toDF("text")
-    // full coverage: identical to the distributed trainer
-    assert(Bpe.trainCutoff(spark, docs, "text", 2, maxTypes = Int.MaxValue) ==
-      Bpe.train(spark, docs, "text", 2))
-    // cutoff to the top-2 types under (freq DESC, word): zz(4), aa(3) —
-    // 'ab' no longer votes, and 'b' leaves the alphabet entirely
-    val cut = Bpe.trainCutoff(spark, docs, "text", 2, maxTypes = 2)
-    assert(cut.alphabet == Seq("a", "z"))
-    assert(cut.merges.map(t => (t._1, t._2, t._3)) ==
-      Seq(("z", "z", 4L), ("a", "a", 3L)))
-  }
-
-  test("trainFullLocal == train under the bound; over it fails LOUDLY") {
-    import spark.implicits._
-    val docs = Seq("aa aa aa ab ab zz zz zz zz").toDF("text")
-    // bound covers all 3 types: exactly the distributed trainer's model
-    assert(Bpe.trainFullLocal(spark, docs, "text", 2, maxTypes = 3) ==
-      Bpe.train(spark, docs, "text", 2))
-    // bound below the type count: an error, never a silently
-    // frequency-cut model (that is trainCutoff's explicit contract)
+  test("train fails loudly above MaxTypes word types") {
+    // MaxTypes + 1 distinct contract-passing words: an error, never a
+    // model trained on part of the vocabulary
+    val docs = spark.range(Bpe.MaxTypes + 1L)
+      .select(concat(lit("w"), col("id").cast("string")).as("text"))
     val e = intercept[IllegalArgumentException] {
-      Bpe.trainFullLocal(spark, docs, "text", 2, maxTypes = 2)
+      Bpe.train(spark, docs, "text", 1)
     }
-    assert(e.getMessage.contains("more than maxTypes"))
+    assert(e.getMessage.contains(s"more than MaxTypes=${Bpe.MaxTypes}"))
   }
 
   test("chunked encode (merges > chunkEvery) == the inline expression chain") {
