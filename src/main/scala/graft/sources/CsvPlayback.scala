@@ -2,13 +2,17 @@ package graft.sources
 
 import graft.config.Enums._
 import graft.config.PlaybackConfig
-import graft.schema.UseColumns
+import graft.streaming.CsvPlaybackStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
-/** Batch core of the playback engine: parses one CSV file into the
-  * post-transform DataFrame (SURVEY.md §7.1 step 4) implementing the
-  * reference's three schema modes (csvplayback.py:556-673):
+/** The playback read stage, shared by the batch reader ([[readFile]])
+  * and the stream (`PlaybackStream.readings`): one driver-side head
+  * read ([[readStage]]) fixes the schema, then one line transform
+  * ([[ReadStage.transform]]) parses any frame of lines into the
+  * post-transform DataFrame (SURVEY.md §7.1 step 4) in the reference's
+  * three schema modes (csvplayback.py:556-673):
   *
   *   - ragged (`variableCols=true`): every line pivoted into
   *     `{prefix}_{i+1}` datapoints, empty fields skipped
@@ -22,7 +26,7 @@ import org.apache.spark.sql.functions._
   * (csvplayback.py:661-671) and the `ignoreNaN=report` validation stage
   * (csvplayback.py:681-691).
   *
-  * Every returned frame carries a `_row_idx` long column — the 0-based
+  * Every batch frame carries a `_row_idx` long column — the 0-based
   * data-row index in file order — used by the order-sensitive timestamp
   * styles (T2/T5) and interpolation fills. Downstream drops it.
   *
@@ -71,17 +75,15 @@ object CsvPlayback {
   /** Rows of the head sample used for schema inference. */
   val InferSampleLines = 1000
 
-  /** Schema inference from a driver-side head sample: Spark's own CSV
+  /** Schema inference over a driver-side head sample: Spark's own CSV
     * inference (the exact code `spark.read.csv(inferSchema=true)` runs)
-    * over the first [[InferSampleLines]] data lines. One tiny local job
+    * over at most [[InferSampleLines]] data lines. One tiny local job
     * at read build — never a second distributed pass over the file,
     * which is what `inferSchema=true` on the full scan would cost at
     * 100 GB. Pandas' chunked reader infers per-chunk anyway
     * (csvplayback.py:638-641), so a head sample is no less faithful. */
-  def inferFromHead(spark: SparkSession, path: String, dataStart: Int,
-      sampleLines: Int = InferSampleLines): org.apache.spark.sql.types.StructType = {
+  def inferFromHead(spark: SparkSession, sample: Seq[String]): StructType = {
     import spark.implicits._
-    val sample = headLines(spark, path, dataStart + sampleLines).drop(dataStart)
     spark.read
       .option("header", "false")
       .option("inferSchema", "true")
@@ -96,122 +98,97 @@ object CsvPlayback {
       .schema
   }
 
-  /** Parses pre-indexed data lines with one codegen'd `from_csv` against
-    * the head-inferred schema, `_row_idx` carried straight through — the
-    * single-pass shape the streaming path uses. (The old form re-parsed
-    * through `spark.read.csv` and re-indexed with `rdd.zipWithIndex`:
-    * three passes and an RDD boundary that broke whole-stage codegen.) */
-  private def parseCsv(lines: DataFrame,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val opts = Map("escape" -> "\"")
-    lines
-      .select(from_csv(col("value"), schema, opts).as("_p"), col(RowIdx))
-      .select(schema.fieldNames.map(f => col("_p").getField(f).as(f)).toIndexedSeq
-        :+ col(RowIdx): _*)
-  }
+  /** The read stage's driver-side half: what one head read of the file
+    * fixes for a config (csvplayback.py:556-673). `dataStart` is the
+    * first physical data line; `names` labels the parse schema's fields
+    * by position ("" drops one) and is None in ragged mode; `casts` are
+    * the useColumns types; `meta` is the pass_in_datapoint value;
+    * `firstLines` are the first two data lines (the T5 sample). */
+  final case class ReadStage(cfg: PlaybackConfig, dataStart: Int,
+      names: Option[Seq[String]], schema: StructType,
+      casts: Map[String, DataType], meta: Option[String], firstLines: Seq[String]) {
 
-  /** The full batch read: schema mode + header method + metadata +
-    * NaN policy. */
-  def readFile(spark: SparkSession, cfg: PlaybackConfig, path: String): DataFrame = {
-    import spark.implicits._
-    assertNonEmpty(spark, path)
-
-    val skip = cfg.headerMethod match {
-      case HeaderMethod.SkipRows | HeaderMethod.PassInDatapoint => cfg.noOfRows
-      case HeaderMethod.DoNotSkip => 0
-    }
-
-    val base: DataFrame =
-      if (cfg.variableCols) {
-        // ragged mode: one reading per line, auto-named datapoints
-        val lines = indexedLines(spark, path)
-          .filter(col(RowIdx) >= skip)
-          .withColumn(RowIdx, col(RowIdx) - skip)
-        raggedPivot(lines, cfg.autoGeneratePrefix)
-      } else cfg.columnMethod match {
-        case ColumnMethod.Explicit =>
-          val spec = cfg.parsedUseColumns
-          // pandas header=0: first post-skip line is consumed as the
-          // (discarded) header, names relabel positionally
-          val dataStart = skip + 1
-          val lines = indexedLines(spark, path)
-            .filter(col(RowIdx) >= dataStart)
-            .withColumn(RowIdx, col(RowIdx) - dataStart)
-          val parsed = parseCsv(lines, inferFromHead(spark, path, dataStart))
-          applySpec(parsed, spec)
-        case ColumnMethod.PickFromFile =>
-          val headerIdx = skip + cfg.rowIndexForColumnNames
-          val headerLine = headLines(spark, path, headerIdx + 1).last
-          val names = headerLine.split(",", -1).toSeq
-          val lines = indexedLines(spark, path)
-            .filter(col(RowIdx) > headerIdx)
-            .withColumn(RowIdx, col(RowIdx) - (headerIdx + 1))
-          val schema = inferFromHead(spark, path, headerIdx + 1)
-          require(schema.length == names.length,
-            s"header declares ${names.length} columns, data has ${schema.length}")
-          val parsed = parseCsv(lines, schema)
-          val dataCols = parsed.columns.filter(_ != RowIdx)
-          parsed.select(
-            dataCols.zip(names).map { case (c, n) => col(c).as(n) } :+ col(RowIdx): _*)
+    /** The read stage's per-line half, over any frame with a `value`
+      * line column: every other column is carried through unchanged.
+      * Ragged mode pivots each line into `{prefix}_{i+1}` datapoints
+      * with empty fields skipped (csvplayback.py:703-711); fixed modes
+      * parse with one codegen'd typed `from_csv`, then rename, cast and
+      * drop per the names and useColumns types (csvplayback.py:601-659).
+      * Under ANSI a cell that does not parse as its type reads null
+      * (PERMISSIVE) and a cast truncates like pandas, so a bad cell
+      * never kills a stream. Then the metadata datapoint
+      * (csvplayback.py:661-671). */
+    def transform(lines: DataFrame): DataFrame = {
+      val carry = lines.columns.filter(_ != "value").map(col).toSeq
+      val body = names match {
+        case None =>
+          lines.select(carry :+ posexplode(split(col("value"), ",", -1)).as(Seq("pos", "v")): _*)
+            .filter(col("v") =!= "")
+            .select(carry ++ Seq(
+              concat(lit(cfg.autoGeneratePrefix + "_"), (col("pos") + 1).cast("string"))
+                .as("datapoint"),
+              col("v").as("value")): _*)
+        case Some(ns) =>
+          val kept = schema.fieldNames.toSeq.zip(ns).collect { case (f, n) if n.nonEmpty =>
+            val c = col("_p").getField(f)
+            casts.get(n).fold(c)(dt => c.cast(dt)).as(n)
+          }
+          lines.select(carry :+ from_csv(col("value"), schema, Map("escape" -> "\"")).as("_p"): _*)
+            .select(kept ++ carry: _*)
       }
-
-    val withMeta = cfg.headerMethod match {
-      case HeaderMethod.PassInDatapoint =>
-        // first noOfRows physical lines joined with "_" attached to every
-        // reading under dataPointForCombine (csvplayback.py:661-671)
-        val meta = headLines(spark, path, cfg.noOfRows).mkString("_")
-        base.withColumn(cfg.dataPointForCombine, lit(meta))
-      case _ => base
-    }
-
-    cfg.ignoreNaN match {
-      case NaNPolicy.Report if !cfg.variableCols =>
-        val bad = NaNReport.violations(withMeta)
-        val offending = bad.filter(_._2 > 0)
-        if (offending.nonEmpty)
-          throw new IllegalStateException(
-            s"There are NaN / missing values in the CSV file: ${offending.keys.mkString(", ")}")
-        withMeta
-      case _ => withMeta
+      meta.fold(body)(m => body.withColumn(cfg.dataPointForCombine, lit(m)))
     }
   }
 
-  /** Ragged-row pivot (csvplayback.py:703-711): line k of fields
-    * v1..vn → rows (k, "{prefix}_{i+1}", vi) with empty fields skipped
-    * (pandas parses them as NaN, which the reference drops). */
-  def raggedPivot(lines: DataFrame, prefix: String): DataFrame = {
-    lines
-      .select(col(RowIdx), posexplode(split(col("value"), ",", -1)).as(Seq("pos", "v")))
-      .filter(col("v") =!= "")
-      .select(
-        col(RowIdx),
-        concat(lit(prefix + "_"), (col("pos") + 1).cast("string")).as("datapoint"),
-        col("v").as("value"))
+  /** One driver-side head read: the data start line, column names,
+    * typed parse schema, column-count check and metadata for `path`. */
+  def readStage(spark: SparkSession, cfg: PlaybackConfig, path: String): ReadStage = {
+    assertNonEmpty(spark, path)
+    val dataStart = CsvPlaybackStream.dataStartLine(cfg)
+    val head = headLines(spark, path, dataStart + InferSampleLines)
+    val sample = head.drop(dataStart)
+    val meta = if (cfg.headerMethod == HeaderMethod.PassInDatapoint)
+      Some(head.take(cfg.noOfRows).mkString("_")) else None
+    def stage(names: Option[Seq[String]], schema: StructType,
+        casts: Map[String, DataType] = Map.empty) =
+      ReadStage(cfg, dataStart, names, schema, casts, meta, sample.take(2))
+    if (cfg.variableCols) return stage(None, new StructType())
+    val (names, casts) = cfg.columnMethod match {
+      case ColumnMethod.Explicit =>
+        val spec = cfg.parsedUseColumns
+        (spec.names, spec.dtypes)
+      case ColumnMethod.PickFromFile =>
+        require(head.length >= dataStart, s"$path has no header line ${dataStart - 1}")
+        (head(dataStart - 1).split(",", -1).toSeq, Map.empty[String, DataType])
+    }
+    // a file with no data lines yet parses its declared columns as strings
+    val schema = if (sample.isEmpty) StructType(names.indices.map(i => StructField(s"_c$i", StringType)))
+      else inferFromHead(spark, sample)
+    // an empty useColumns keeps the parse schema's own names
+    if (names.isEmpty) stage(Some(schema.fieldNames.toSeq), schema)
+    else {
+      require(schema.length == names.length,
+        s"${cfg.columnMethod.key} declares ${names.length} columns, data has ${schema.length}")
+      stage(Some(names), schema, casts)
+    }
   }
 
-  /** Ragged readings in the reference's per-row dict shape:
-    * one row per line with a `readings` map. */
-  def raggedReadingsMap(lines: DataFrame, prefix: String): DataFrame =
-    raggedPivot(lines, prefix)
-      .groupBy(col(RowIdx))
-      .agg(map_from_entries(
-        array_sort(collect_list(struct(col("datapoint"), col("value"))))).as("readings"))
-
-  /** Positional rename + select + cast from a useColumns spec
-    * (csvplayback.py:640-649). */
-  private def applySpec(parsed: DataFrame, spec: UseColumns.Spec): DataFrame = {
-    val dataCols = parsed.columns.filter(_ != RowIdx)
-    if (spec.isEmpty) return parsed
-    require(dataCols.length == spec.names.length,
-      s"useColumns declares ${spec.names.length} positions, file has ${dataCols.length} columns")
-    val kept = dataCols.zip(spec.names).collect {
-      case (c, n) if n.nonEmpty =>
-        spec.dtypes.get(n) match {
-          case Some(dt) => col(c).cast(dt).as(n)
-          case None => col(c).as(n)
-        }
+  /** The full batch read: [[indexedLines]] past the header → the read
+    * stage's transform → the NaN policy. */
+  def readFile(spark: SparkSession, cfg: PlaybackConfig, path: String): DataFrame = {
+    val rs = readStage(spark, cfg, path)
+    val df = rs.transform(indexedLines(spark, path)
+      .filter(col(RowIdx) >= rs.dataStart)
+      .withColumn(RowIdx, col(RowIdx) - rs.dataStart))
+    // a bounded frame is checked by one eager aggregate naming every
+    // offending column; the stream guards per value instead
+    if (cfg.ignoreNaN == NaNPolicy.Report && !cfg.variableCols) {
+      val offending = NaNReport.violations(df).filter(_._2 > 0)
+      if (offending.nonEmpty)
+        throw new IllegalStateException(
+          s"There are NaN / missing values in the CSV file: ${offending.keys.mkString(", ")}")
     }
-    parsed.select(kept :+ col(RowIdx): _*)
+    df
   }
 }
 

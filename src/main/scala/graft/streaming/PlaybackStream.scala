@@ -2,23 +2,17 @@ package graft.streaming
 
 import graft.config.Enums._
 import graft.config.PlaybackConfig
-import graft.schema.UseColumns
+import graft.operators.TimestampStyles
 import graft.sources.CsvPlayback
-import graft.timefmt.Strftime
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** User-facing playback stream: the raw rate-limited source
-  * ([[CsvPlaybackStream]]) parsed into typed datapoint columns with the
-  * configured timestamp style applied — the full reference pipeline
-  * (scan → project/rename/cast → ts rewrite → emit,
-  * csvplayback.py:675-784) as one declarative streaming DataFrame.
-  *
-  * Parsing happens with `from_csv` (codegen'd) against a schema
-  * resolved once, driver-side, from the file head — mirroring the
-  * reference's single schema resolution at `read_csv_file`
-  * (csvplayback.py:556-673).
+  * ([[CsvPlaybackStream]]) through the batch reader's read stage
+  * ([[CsvPlayback.readStage]]) with the configured timestamp style
+  * applied — the full reference pipeline (scan → project/rename/cast →
+  * ts rewrite → emit, csvplayback.py:675-784) as one declarative
+  * streaming DataFrame: the batch read, run incrementally.
   */
 object PlaybackStream {
 
@@ -29,29 +23,9 @@ object PlaybackStream {
       .options(PlaybackConfig.toOptions(cfg))
       .load()
 
-  /** Driver-side schema resolution from the file head: column names per
-    * the config's schema mode; untyped columns get their types inferred
-    * from a head sample (see [[inferDtypes]]), explicit `useColumns`
-    * types win. */
-  def resolveColumns(spark: SparkSession, cfg: PlaybackConfig, path: String): Seq[String] = {
-    if (cfg.variableCols)
-      return Seq.empty // ragged mode pivots, no fixed columns
-    cfg.columnMethod match {
-      case ColumnMethod.Explicit =>
-        cfg.parsedUseColumns.names
-      case ColumnMethod.PickFromFile =>
-        val skip = cfg.headerMethod match {
-          case HeaderMethod.SkipRows | HeaderMethod.PassInDatapoint => cfg.noOfRows
-          case HeaderMethod.DoNotSkip => 0
-        }
-        val headerIdx = skip + cfg.rowIndexForColumnNames
-        CsvPlayback.headLines(spark, path, headerIdx + 1).last.split(",", -1).toSeq
-    }
-  }
-
   /** The parsed playback stream. For fixed-column modes: one column per
-    * datapoint (+ row_idx/emit_ts carried through); ragged mode: the
-    * (row_idx, datapoint, value) long form. */
+    * datapoint (+ row_idx/pos_in_batch/emit_ts carried through); ragged
+    * mode: the (row_idx, …, datapoint, value) long form. */
   def readings(spark: SparkSession, cfg0: PlaybackConfig): DataFrame = {
     val cfg = cfg0.validated
     val dir = PlaybackConfig.resolveDataDir(cfg.csvDirName)
@@ -59,66 +33,23 @@ object PlaybackStream {
       .headOption.getOrElse(
         throw new java.io.FileNotFoundException(s"no csv matching '${cfg.csvFileName}' in $dir"))
       .toString
-
-    val base = raw(spark, cfg)
-
-    val parsed: DataFrame =
-      if (cfg.variableCols) {
-        // ragged pivot (csvplayback.py:703-711) on the line stream
-        base.select(col("row_idx"), col("pos_in_batch"), col("emit_ts"),
-            posexplode(split(col("value"), ",", -1)).as(Seq("pos", "v")))
-          .filter(col("v") =!= "")
-          .select(col("row_idx"), col("pos_in_batch"), col("emit_ts"),
-            concat(lit(cfg.autoGeneratePrefix + "_"), (col("pos") + 1).cast("string"))
-              .as("datapoint"),
-            col("v").as("value"))
-      } else {
-        val names = resolveColumns(spark, cfg, file)
-        val spec = cfg.parsedUseColumns
-        val parseNames = names.zipWithIndex.map { case (n, i) => if (n.isEmpty) s"_drop$i" else n }
-        val parseSchema = StructType(parseNames.map(StructField(_, StringType)))
-        val opts = Map("escape" -> "\"")
-        val inferred: Map[String, DataType] =
-          if (names.exists(n => n.nonEmpty && !spec.dtypes.contains(n)))
-            inferDtypes(spark, cfg, file, parseNames)
-          else Map.empty
-        val withCols = base.withColumn("_parsed",
-          from_csv(col("value"), parseSchema, opts))
-        val kept = names.filter(_.nonEmpty).map { n =>
-          spec.dtypes.get(n).orElse(inferred.get(n).filter(_ != StringType)) match {
-            case Some(dt) => col("_parsed")(n).cast(dt).as(n)
-            case None => col("_parsed")(n).as(n)
-          }
-        }
-        withCols.select(kept ++ Seq(col("row_idx"), col("pos_in_batch"), col("emit_ts")): _*)
-      }
-
-    val validated = withReportNaN(parsed, cfg)
-
-    val withMeta = cfg.headerMethod match {
-      case HeaderMethod.PassInDatapoint =>
-        val meta = CsvPlayback.headLines(spark, file, cfg.noOfRows).mkString("_")
-        validated.withColumn(cfg.dataPointForCombine, lit(meta))
-      case _ => validated
-    }
-
-    applyTimestampStyle(spark, cfg, withMeta, file)
+    val rs = CsvPlayback.readStage(spark, cfg, file)
+    applyTimestampStyle(spark, rs, withReportNaN(rs.transform(raw(spark, cfg)), cfg))
   }
 
-  /** Streaming twin of the batch `ignoreNaN=report` stage
-    * (csvplayback.py:681-691, validated per chunk before the timestamp
-    * rewrite, fixed-column modes only — same call order here): each
+  private val Carried = CsvPlaybackStream.SCHEMA.fieldNames.toSet - "value"
+
+  /** Streaming `ignoreNaN=report` (csvplayback.py:681-691): an unbounded
+    * frame cannot be aggregated first like the batch reader's, so each
     * datapoint column is wrapped in a codegen'd null/blank guard that
     * `raise_error`s with the reference's message on the first offending
-    * value. The failure surfaces through ANY sink (foreachBatch or
-    * `startTo`) and terminates the query — the reference's
-    * plugin_shutdown — with no extra per-batch aggregation job; the
-    * check rides the existing parse projection. */
+    * value. The failure surfaces through ANY sink and terminates the
+    * query — the reference's plugin_shutdown — with no extra per-batch
+    * job; the check rides the parse projection. */
   private def withReportNaN(df: DataFrame, cfg: PlaybackConfig): DataFrame = {
     if (cfg.ignoreNaN != NaNPolicy.Report || cfg.variableCols) return df
-    val internal = Set("row_idx", "pos_in_batch", "emit_ts")
     val checked = df.columns.map { c =>
-      if (internal(c)) col(c)
+      if (Carried(c)) col(c)
       else {
         val s = col(c).cast("string")
         when(col(c).isNull || (length(s) > 0 && trim(s) === ""),
@@ -129,64 +60,41 @@ object PlaybackStream {
     df.select(checked.toIndexedSeq: _*)
   }
 
-  /** Driver-side dtype inference for untyped columns: Spark's own CSV
-    * inference run over a head sample of data lines — the streaming
-    * stand-in for pandas' chunked inference (csvplayback.py:638-641),
-    * and byte-for-byte the same inference code the batch reader uses
-    * ([[CsvPlayback]]'s `parseCsv`), so batch and stream dtypes agree.
-    * One tiny local job at stream build, never per-batch. */
-  def inferDtypes(spark: SparkSession, cfg: PlaybackConfig, path: String,
-      parseNames: Seq[String]): Map[String, DataType] = {
-    val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-    CsvPlayback.inferFromHead(spark, path, dataStart).fields.zipWithIndex.collect {
-      case (f, i) if i < parseNames.length => parseNames(i) -> f.dataType
-    }.toMap
-  }
-
   /** The four timestamp styles on the stream (SURVEY.md §2.4). */
-  private def applyTimestampStyle(spark: SparkSession, cfg: PlaybackConfig,
-      df: DataFrame, file: String): DataFrame = cfg.timestampStyle match {
-    case TimestampStyle.CurrentTime =>
-      cfg.ingestMode match {
-        case IngestMode.Burst =>
-          // T1: uniform batch emission timestamp (csvplayback.py:747-749)
-          df.withColumn("timestamp", col("emit_ts"))
-        case IngestMode.Continuous =>
-          // T2: batch base second + pos*(1e6/chunk) µs (csvplayback.py:739-743)
-          val interval = (1000000.0 / math.max(1, cfg.chunkSize)).toLong
-          df.withColumn("timestamp", timestamp_micros(
-            (unix_micros(col("emit_ts")) / 1000000L).cast("long") * 1000000L +
-              col("pos_in_batch") * interval))
-      }
-    case TimestampStyle.CopyCsvValue =>
-      df.withColumn("timestamp",
-        to_timestamp(col(cfg.timestampCol).cast("string"), Strftime.toJava(cfg.timestampFormat)))
-    case TimestampStyle.MoveCsvValue =>
-      df.withColumn("timestamp",
-          to_timestamp(col(cfg.timestampCol).cast("string"), Strftime.toJava(cfg.timestampFormat)))
-        .drop(cfg.timestampCol)
-    case TimestampStyle.UseCsvSampleDelta =>
-      // T5: delta from the file's first two rows, once, driver-side
-      // (csvplayback.py:726-736); start = stream build wall-clock;
-      // row_idx is monotone across replays so timestamps never repeat
-      val fmt = Strftime.toJava(cfg.timestampFormat)
-      val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-      val head = CsvPlayback.headLines(spark, file, dataStart + 2).takeRight(2)
-      require(head.length == 2, "use csv sample delta needs at least 2 data rows")
-      val tsIdx = {
-        val names = resolveColumns(spark, cfg, file)
-        val i = names.indexOf(cfg.timestampCol)
-        require(i >= 0, s"timestampCol '${cfg.timestampCol}' not in $names")
-        i
-      }
-      val fmtJ = java.time.format.DateTimeFormatter.ofPattern(fmt)
-      def parse(lineIdx: Int): Long = {
-        val v = head(lineIdx).split(",", -1)(tsIdx)
-        val t = java.time.OffsetDateTime.parse(v, fmtJ)
-        t.toInstant.getEpochSecond * 1000000L + t.getNano / 1000L
-      }
-      val delta = parse(1) - parse(0)
-      val start = System.currentTimeMillis() * 1000L
-      df.withColumn("timestamp", timestamp_micros(lit(start) + col("row_idx") * lit(delta)))
+  private def applyTimestampStyle(spark: SparkSession, rs: CsvPlayback.ReadStage,
+      df: DataFrame): DataFrame = {
+    val cfg = rs.cfg
+    cfg.timestampStyle match {
+      // T1/T2 read the source's real emission clock (emit_ts,
+      // pos_in_batch); the batch forms take an explicit clock instead
+      case TimestampStyle.CurrentTime =>
+        cfg.ingestMode match {
+          case IngestMode.Burst =>
+            // T1: uniform batch emission timestamp (csvplayback.py:747-749)
+            df.withColumn(TimestampStyles.TsCol, col("emit_ts"))
+          case IngestMode.Continuous =>
+            // T2: batch base second + pos*(1e6/chunk) µs (csvplayback.py:739-743)
+            val interval = (1000000.0 / math.max(1, cfg.chunkSize)).toLong
+            df.withColumn(TimestampStyles.TsCol, timestamp_micros(
+              (unix_micros(col("emit_ts")) / 1000000L).cast("long") * 1000000L +
+                col("pos_in_batch") * interval))
+        }
+      case TimestampStyle.CopyCsvValue =>
+        TimestampStyles.copyCsvValue(df, cfg.timestampCol, cfg.timestampFormat)
+      case TimestampStyle.MoveCsvValue =>
+        TimestampStyles.moveCsvValue(df, cfg.timestampCol, cfg.timestampFormat)
+      case TimestampStyle.UseCsvSampleDelta =>
+        // T5: delta from the file's first two data lines through the same
+        // read stage, once (csvplayback.py:726-736); start = stream build
+        // wall-clock; row_idx is monotone across replays so timestamps
+        // never repeat
+        import spark.implicits._
+        val head = rs.transform(rs.firstLines.zipWithIndex
+          .map { case (l, i) => (l, i.toLong) }.toDF("value", CsvPlayback.RowIdx))
+        val delta = TimestampStyles.sampleDeltaMicros(head, cfg.timestampCol, cfg.timestampFormat)
+        val start = System.currentTimeMillis() * 1000L
+        df.withColumn(TimestampStyles.TsCol,
+          timestamp_micros(lit(start) + col("row_idx") * lit(delta)))
+    }
   }
 }

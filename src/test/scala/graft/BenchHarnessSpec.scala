@@ -51,13 +51,20 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(json.contains(""""bench_failures":0"""), json)
   }
 
-  test("renderJson emits the in-band scaling contract (cpus/master/sf_dir)") {
+  test("renderJson emits the in-band scaling contract (cpus/master/sf)") {
     val json = Bench.renderJson(
       Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf",
       cpus = "32", master = "local[32]")
     assert(json.contains(""""cpus":32"""), json)
     assert(json.contains(""""master":"local[32]""""), json)
-    assert(json.contains(""""sf_dir":"/tmp/sf""""), json)
+    assert(json.contains(""""sf":"/tmp/sf""""), json)
+    assert(!json.contains("sf_dir"), json)
+    // the data dir is an escaped JSON string, whatever its characters
+    val odd = """/tmp/a"b\c"""
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Bench.renderJson(Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, odd,
+        cpus = "32", master = "local[32]"))
+    assert(tree.get("sf").asText == odd, tree)
     // legacy callers (no cpus) keep the old shape — no dangling comma
     val legacy = Bench.renderJson(
       Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf")

@@ -32,8 +32,10 @@ class PlaybackStreamSpec extends SparkSpec {
       .start()
     try {
       val deadline = System.currentTimeMillis() + maxWaitMs
-      while (!stopWhen() && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(stopWhen(), s"condition not reached within ${maxWaitMs}ms")
+      // a failed query cannot reach the condition: stop waiting
+      while (!stopWhen() && q.isActive && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(stopWhen(), s"condition not reached within ${maxWaitMs}ms" +
+        q.exception.fold("")(e => s"; the query failed: ${e.getMessage}"))
     } finally q.stop()
   }
 
@@ -266,6 +268,11 @@ class PlaybackStreamSpec extends SparkSpec {
     val r = spark.sql("SELECT id, temperature, status FROM typedq ORDER BY id").collect()
     assert(r.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(math.abs(r(0).getDouble(1) - 2.5) < 1e-12)
+    // an int cast of the float column truncates like pandas, as on batch
+    runStream(cfg.copy(csvDirName = stage("typed.csv").toString,
+        useColumns = "id:int,temperature:int,status:str"), "typedint",
+      () => count("typedint") >= 3)
+    assert(spark.sql("SELECT temperature FROM typedint ORDER BY id").head().getLong(0) == 2L)
   }
 
   test("ragged mode streams the pivoted long form") {
@@ -361,23 +368,45 @@ class PlaybackStreamSpec extends SparkSpec {
     val want = batch.orderBy(graft.sources.CsvPlayback.RowIdx)
       .select("channel1").collect().map(_.getDouble(0)).toSeq
     assert(got == want)
+    // a cell past the inference head that does not parse as its
+    // inferred type reads the same on both paths (and fails neither)
+    val late = Files.createTempDirectory("latebad")
+    val rows = (0 until 1001).map(i => s"$i,$i") :+ "1001,x7"
+    Files.writeString(late.resolve("late.csv"), ("a,b" +: rows).mkString("\n") + "\n")
+    val lateCfg = PlaybackConfig(csvDirName = late.toString, csvFileName = "late",
+      ingestMode = IngestMode.Continuous, sampleRate = 2000,
+      postProcessMethod = PostProcess.ContinuePlaying)
+    val lateBatch = graft.sources.CsvPlayback.readFile(spark, lateCfg,
+      late.resolve("late.csv").toString).filter(col("_row_idx") === 1001L)
+      .select("a", "b").collect().toSeq
+    runStream(lateCfg, "latebad", () => count("latebad") >= 1002)
+    val lateStream = spark.sql("SELECT a, b FROM latebad WHERE row_idx = 1001").collect().toSeq
+    assert(lateStream == lateBatch && lateBatch.length == 1,
+      s"stream $lateStream == batch $lateBatch")
   }
 
   test("T5 sample-delta timestamps are monotone on the stream") {
-    val dir = stage("vibration.csv")
-    val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "vibration",
-      ingestMode = IngestMode.Continuous, sampleRate = 2,
-      timestampStyle = TimestampStyle.UseCsvSampleDelta,
-      timestampCol = "user_ts", postProcessMethod = PostProcess.ContinuePlaying)
-    runStream(cfg, "delta", () => count("delta") >= 6)
-    val ts = spark.sql("SELECT row_idx, timestamp FROM delta ORDER BY row_idx")
-      .collect().map(_.getTimestamp(1).getTime * 1000)
-    // 125µs delta: consecutive stamps differ by exactly 125µs → ms-level:
-    // every 8th stamp advances 1ms; just assert strict monotonicity in µs
-    val tsMicros = spark.sql("SELECT row_idx, unix_micros(timestamp) FROM delta ORDER BY row_idx")
-      .collect().map(_.getLong(1))
-    assert(tsMicros.sliding(2).forall(p => p(1) - p(0) == 125L),
-      s"uniform 125µs spacing across replays: ${tsMicros.take(8).toSeq}")
+    def check(dir: Path, file: String, fmt: String, name: String): Unit = {
+      val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = file,
+        ingestMode = IngestMode.Continuous, sampleRate = 2,
+        timestampStyle = TimestampStyle.UseCsvSampleDelta, timestampCol = "user_ts",
+        timestampFormat = fmt, postProcessMethod = PostProcess.ContinuePlaying)
+      runStream(cfg, name, () => count(name) >= 6)
+      // every fixture steps 125µs between its first two rows
+      val tsMicros = spark.sql(s"SELECT row_idx, unix_micros(timestamp) FROM $name ORDER BY row_idx")
+        .collect().map(_.getLong(1))
+      assert(tsMicros.sliding(2).forall(p => p(1) - p(0) == 125L),
+        s"$name: uniform 125µs spacing across replays: ${tsMicros.take(8).toSeq}")
+    }
+    val zoned = "%Y-%m-%d %H:%M:%S.%f%z"
+    check(stage("vibration.csv"), "vibration", zoned, "delta")
+    // a zone-less format
+    val naive = Files.createTempDirectory("naive")
+    Files.writeString(naive.resolve("naive.csv"),
+      Files.readString(Paths.get(fixture("vibration.csv"))).replace("+0000", ""))
+    check(naive, "naive", "%Y-%m-%d %H:%M:%S.%f", "deltanaive")
+    // a quoted field holding commas before the timestamp column
+    check(stage("raw_fledge_export.csv"), "raw_fledge", zoned, "deltaquoted")
   }
 
   test("recovered anchor rejects a same-named file with different bytes") {
