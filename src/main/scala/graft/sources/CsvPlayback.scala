@@ -5,7 +5,7 @@ import graft.config.PlaybackConfig
 import graft.streaming.CsvPlaybackStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 
 /** The playback read stage, shared by the batch reader ([[readFile]])
   * and the stream (`PlaybackStream.readings`): one driver-side head
@@ -140,6 +140,9 @@ object CsvPlayback {
     }
   }
 
+  /** useColumns types the parse schema takes directly instead of casting. */
+  private val ParseAsDeclared: Set[DataType] = Set(StringType, DoubleType)
+
   /** One driver-side head read: the data start line, column names,
     * typed parse schema, column-count check and metadata for `path`. */
   def readStage(spark: SparkSession, cfg: PlaybackConfig, path: String): ReadStage = {
@@ -169,7 +172,13 @@ object CsvPlayback {
     else {
       require(schema.length == names.length,
         s"${cfg.columnMethod.key} declares ${names.length} columns, data has ${schema.length}")
-      stage(Some(names), schema, casts)
+      // str and float parse as declared, so `007` stays text and a 20.5
+      // after a whole-number head stays 20.5; int keeps the guessed type
+      // plus a cast, which truncates 2.5 to 2 like pandas
+      val parse = StructType(schema.fields.zip(names).map { case (f, n) =>
+        casts.get(n).filter(ParseAsDeclared).fold(f)(dt => f.copy(dataType = dt))
+      })
+      stage(Some(names), parse, casts)
     }
   }
 

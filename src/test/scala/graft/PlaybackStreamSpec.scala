@@ -383,6 +383,25 @@ class PlaybackStreamSpec extends SparkSpec {
     val lateStream = spark.sql("SELECT a, b FROM latebad WHERE row_idx = 1001").collect().toSeq
     assert(lateStream == lateBatch && lateBatch.length == 1,
       s"stream $lateStream == batch $lateBatch")
+    // declared float and str types decide the parse: a 20.5 after a
+    // whole-number head and a leading-zero `007` keep their values on
+    // both paths, with no false NaN report
+    val decl = Files.createTempDirectory("declared")
+    val declRows = (0 until 1001).map(i => s"$i,$i,007") :+ "1001,20.5,007"
+    Files.writeString(decl.resolve("decl.csv"), ("id,temperature,code" +: declRows).mkString("\n") + "\n")
+    val declCfg = PlaybackConfig(csvDirName = decl.toString, csvFileName = "decl",
+      columnMethod = ColumnMethod.Explicit, useColumns = "id:int,temperature:float,code:str",
+      ignoreNaN = NaNPolicy.Report, ingestMode = IngestMode.Continuous, sampleRate = 2000,
+      postProcessMethod = PostProcess.ContinuePlaying)
+    val declBatch = graft.sources.CsvPlayback.readFile(spark, declCfg,
+      decl.resolve("decl.csv").toString).filter(col("_row_idx") === 1001L)
+      .select("temperature", "code").collect().toSeq
+    assert(declBatch.map(r => (r.getDouble(0), r.getString(1))) == Seq((20.5, "007")),
+      s"batch $declBatch")
+    runStream(declCfg, "declared", () => count("declared") >= 1002)
+    val declStream = spark.sql("SELECT temperature, code FROM declared WHERE row_idx = 1001")
+      .collect().toSeq
+    assert(declStream == declBatch, s"stream $declStream == batch $declBatch")
   }
 
   test("T5 sample-delta timestamps are monotone on the stream") {
